@@ -6,8 +6,8 @@ a ``documents``-shaped table (doc_id, text, lang, source, n_chars).  One
 exception by measurement: the repetition scalars also exist as a pure-Python
 twin (``repetition_stats_py``, wrapped by ``udfs.repetition_stats_udf``)
 because the interpreted higher-order-function folds are 4× slower at corpus
-scale — the Catalyst forms stay as the semantic oracle and the Python-free
-fallback (BENCH/ROUND5.md).
+scale — the Catalyst forms stay as the tests' semantic oracle
+(BENCH/ROUND5.md).
 """
 
 from __future__ import annotations

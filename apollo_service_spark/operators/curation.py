@@ -274,6 +274,9 @@ def pack_sequences(
     ``docs`` — callers that fork one narrow persisted ``(id, count)`` frame
     to several consumers (``q_corpus_prepare``) pass it so the tape math
     consumes the shared frame instead of re-tokenizing ``text_col``.
+    The column must be non-null: it is not coalesced, so a NULL count gives
+    that doc NULL ``n_tokens`` and NULL chunk bounds instead of the empty-doc
+    result (``n_tokens`` 0) the text path gives empty text.
 
     Output: ``(id, n_tokens, tok_start, chunk_first, chunk_last)``.
     """

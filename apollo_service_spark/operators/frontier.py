@@ -12,9 +12,10 @@ iteration of the driver loop is one Spark job:
 3. **expand** — ``extract_links_udf`` (Arrow) → ``explode`` → canonicalize →
    ignore-pattern / domain / document filters (urlkit, Catalyst-native) →
    robots broadcast gate (robots.py).
-4. **dedup** — bloom pre-filter (bloom.py) then exact
-   ``LEFT ANTI JOIN`` against the accumulated seen set, then against the
-   carryover frontier (reference double-check under lock, `apollo.py:592-604`).
+4. **dedup** — exact ``LEFT ANTI JOIN`` against the carryover frontier and
+   in-flight batch, then the partitioned bloom seen-store (seen.py): a
+   per-partition bloom probe plus an exact pid-local url check inside one
+   task (reference double-check under lock, `apollo.py:592-604`).
 5. **commit** — frontier, seen delta, crawl log, per-partition lineage and
    iteration metrics land in one SnapshotStore commit; a crawl resumes
    mid-frontier from the latest committed iteration.
@@ -32,7 +33,7 @@ any host's per-iteration BATCH, and the opt-in two-phase selection
 (`CrawlConfig.politeness_prune` → politeness.select_batch) bounds the
 per-host WINDOW straggler a mega-host frontier would otherwise create;
 robots and politeness dims are broadcast; AQE handles residual skew in the
-anti-join.
+exclusion anti-join.
 """
 
 from __future__ import annotations
@@ -49,7 +50,7 @@ from ..functions.udfs import extract_links_udf
 from ..sources.storage import SnapshotStore
 from . import politeness as politeness_ops
 from . import robots as robots_ops
-from .bloom import build_bloom, split_by_bloom
+from .seen import PartitionedBloomSeenStore
 
 
 @dataclass
@@ -64,16 +65,8 @@ class CrawlConfig:
     n_partitions: int = 32
     salt: int = 42
     bloom_fpp: float = 0.01
-    use_bloom: bool = True
-    bloom_min_seen: int = 10_000          # below this the exact join is cheap
     max_iterations: int = 1000
-    # "partitioned" (default) maintains per-partition bloom bitmaps + exact
-    # url sets incrementally — the 10^10-scale path (operators/seen.py): cost
-    # per superstep is proportional to the delta and nothing bloom-shaped
-    # crosses the driver. "broadcast" rebuilds+broadcasts one bloom per
-    # iteration (only sane to ~10^8 seen urls; kept for A/B benchmarking).
-    seen_backend: str = "partitioned"
-    expected_urls: int = 1_000_000        # bloom sizing for "partitioned"
+    expected_urls: int = 1_000_000        # seen-store bloom sizing
     # opt-in two-phase batch selection: bounds the per-host window straggler
     # when one mega-host dominates the frontier (politeness.select_batch);
     # None = single exact window (right for skew-free frontiers)
@@ -167,18 +160,16 @@ class FrontierEngine:
             )
         self.politeness = politeness
         self.sitemap_bodies = sitemap_bodies
-        if self.config.seen_backend == "partitioned":
-            from .seen import PartitionedBloomSeenStore
-
-            self.seen_store = PartitionedBloomSeenStore(
-                store.root,
-                n_partitions=self.config.n_partitions,
-                expected_urls=self.config.expected_urls,
-                fpp=self.config.bloom_fpp,
-                salt=self.config.salt,
-            )
-        else:
-            self.seen_store = None
+        # the seen set: per-partition bloom bitmaps + exact url sets,
+        # maintained incrementally (seen.py) — cost per superstep tracks the
+        # delta and nothing bloom-shaped crosses the driver
+        self.seen_store = PartitionedBloomSeenStore(
+            store.root,
+            n_partitions=self.config.n_partitions,
+            expected_urls=self.config.expected_urls,
+            fpp=self.config.bloom_fpp,
+            salt=self.config.salt,
+        )
 
     # ------------------------------------------------------------------ init
 
@@ -255,26 +246,18 @@ class FrontierEngine:
         links = links.withColumn("path", urlkit.url_path(F.col("url")))
         return robots_ops.robots_allow(links, self.robots_agg).drop("path")
 
-    def _dedup(
-        self,
-        links: DataFrame,
-        seen: DataFrame | None,
-        exclude: DataFrame,
-        seen_count: int,
-    ) -> DataFrame:
-        """Dedup candidates vs the seen set and vs in-flight/carryover urls.
+    def _dedup(self, links: DataFrame, exclude: DataFrame) -> DataFrame:
+        """Dedup candidates vs in-flight/carryover urls and the seen set.
 
-        Partitioned backend: one partition-local pass (bloom probe + exact
+        The seen check is one partition-local pass (bloom probe + exact
         pid-local url set inside the task, seen.py:filter_new) — the
-        accumulated seen set never shuffles. Broadcast backend: bloom
-        pre-filter + exact anti-join against the accumulated seen table.
+        accumulated seen set never shuffles.
 
         ``exclude`` is the union of the carryover frontier and this
         iteration's scheduled batch — the reference's visited-set membership
         includes in-flight URLs (`apollo.py:442-452`), so links back to a
         just-fetched page must not re-enter the frontier.
         """
-        cfg = self.config
         # dedup on url alone — host is a pure function of the url, so it is
         # recomputed AFTER the aggregate instead of riding the shuffle as a
         # grouping key (narrower shuffle rows, one fewer key column)
@@ -290,20 +273,7 @@ class FrontierEngine:
         # Python pass. Order vs the seen check is semantically free (both
         # are row filters).
         links = links.join(exclude.select("url"), "url", "left_anti")
-        if self.seen_store is not None:
-            new = self.seen_store.filter_new(links)
-        elif cfg.use_bloom and seen_count >= cfg.bloom_min_seen:
-            bloom = build_bloom(
-                seen, "url", n_items=max(seen_count, 1), fpp=cfg.bloom_fpp
-            )
-            definitely_new, maybe_seen = split_by_bloom(
-                self.spark, links, "url", bloom
-            )
-            checked = maybe_seen.join(seen.select("url"), "url", "left_anti")
-            new = definitely_new.unionByName(checked)
-        else:
-            new = links.join(seen.select("url"), "url", "left_anti")
-        return new.select(*_FRONTIER_SCHEMA)
+        return self.seen_store.filter_new(links).select(*_FRONTIER_SCHEMA)
 
     # ------------------------------------------------------------------ loop
 
@@ -321,32 +291,18 @@ class FrontierEngine:
             metrics = store.iteration_metrics()
             pages_fetched = sum(m.get("pages_fetched", 0) for m in metrics)
             links_processed = sum(m.get("links_found", 0) for m in metrics)
-            # seen deltas are disjoint (a url is scheduled at most once), so
-            # the cumulative scheduled count IS the seen-set size — no
-            # per-iteration count() job on the accumulated table
-            seen_count = sum(m.get("scheduled", 0) for m in metrics)
         else:
             if seeds is None:
                 raise ValueError("seeds required for a fresh crawl")
-            if self.seen_store is not None:
-                self.seen_store.reset()
+            self.seen_store.reset()
             start_iter = 0
             frontier = self._init_frontier(seeds)
             pages_fetched = 0
             links_processed = 0
-            seen_count = 0
         # one count per RUN (not per iteration): every subsequent frontier
         # size is observed for free during the previous commit's write
         frontier = frontier.persist()
         frontier_size = frontier.count()
-
-        seen = None
-        if self.seen_store is None:
-            seen = (
-                store.read_accumulated(spark, "seen_delta")
-                if resume and store.latest_iteration() >= 0
-                else None
-            ) or spark.createDataFrame([], "url string")
 
         reason = "frontier_exhausted"
         iteration = start_iter - 1
@@ -454,7 +410,7 @@ class FrontierEngine:
                 obs_links, F.count(F.lit(1)).alias("links_found")
             )
             exclude = carryover.select("url").unionByName(ranked.select("url"))
-            new_links = self._dedup(links, seen, exclude, seen_count)
+            new_links = self._dedup(links, exclude)
 
             obs_next = Observation()
             # plain union, no merge aggregate: the two sides are provably
@@ -489,11 +445,9 @@ class FrontierEngine:
             # commit so the store is always a superset of the committed seen
             # set (crash-safe: supersets only cause extra exclusions of urls
             # the crawl already scheduled, never lost urls)
-            store_update_s = 0.0
-            if self.seen_store is not None:
-                t_upd = time.monotonic()
-                self.seen_store.update(ranked.select("url", "host"))
-                store_update_s = round(time.monotonic() - t_upd, 4)
+            t_upd = time.monotonic()
+            self.seen_store.update(ranked.select("url", "host"))
+            store_update_s = round(time.monotonic() - t_upd, 4)
 
             def _metrics() -> dict:
                 # evaluated by the store AFTER the table writes — the writes
@@ -534,7 +488,6 @@ class FrontierEngine:
 
             pages_fetched += m["pages_fetched"]
             links_processed += m["links_found"]
-            seen_count += m["scheduled"]
             frontier_size = int(
                 _obs_metrics(
                     obs_next, lambda: {"next_size": next_frontier.count()}
@@ -555,8 +508,6 @@ class FrontierEngine:
             # read state back from the committed snapshot: truncates lineage
             # (persisted here, once — the loop top never re-persists)
             frontier = store.read(spark, "frontier", iteration).persist()
-            if self.seen_store is None:
-                seen = store.read_accumulated(spark, "seen_delta")
         else:
             reason = "max_iterations"
             frontier.unpersist()

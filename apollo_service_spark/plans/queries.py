@@ -1334,10 +1334,10 @@ def q_repetition_stats(spark, sf_dir):
     query is one scan plus one ArrowEvalPython projection
     (``udfs.repetition_stats_udf``, the Counter kernel; semantics pinned
     to the Catalyst folds ``top_run``/``dup_run_chars`` by property test).
-    The Arrow kernel is the measured default — the interpreted
-    higher-order-function folds were the cleaning stack's slowest stage
-    (~4× slower end-to-end at 400k docs) and both pure-Catalyst rewrites
-    lost; see ``REPETITION_IMPL`` and BENCH/ROUND5.md.  Scales: no
+    The Arrow kernel replaced those interpreted higher-order-function folds,
+    which were the cleaning stack's slowest stage (~4× slower end-to-end at
+    400k docs; both pure-Catalyst rewrites lost too, BENCH/ROUND5.md); the
+    folds survive only as the tests' reference.  Scales: no
     exchange at all (the earlier explode+double-groupBy shape shuffled
     ~2 string rows per word, twice); the worst skew is one pathological
     doc, which costs its own O(W) Counter pass in its own task."""
@@ -1345,53 +1345,24 @@ def q_repetition_stats(spark, sf_dir):
     return _with_repetition_stats(docs.select("doc_id", "text")).drop("text")
 
 
-def _repetition_raw_cols() -> list:
-    """The three per-doc scalars the repetition fracs derive from, as named
-    column expressions over a ``text`` column — addable to ANY projection
-    that already scans the documents (they shuffle nothing)."""
-    return [
-        textstats.word_char_count(F.col("text")).alias("wchars"),
-        textstats.top_run(
-            F.array_sort(textstats.word_ngrams(F.col("text"), 2))
-        ).alias("top"),
-        textstats.dup_run_chars(
-            F.array_sort(textstats.word_ngrams(F.col("text"), 3)), 3
-        ).alias("dupchars"),
-    ]
-
-
-# Which engine computes the repetition raw scalars: "catalyst" (the
-# higher-order-function folds) or "arrow" (udfs.repetition_stats_udf, the
-# Counter kernel).  Hash-identical (property-tested).  Arrow is the
-# measured default: 400k 60-word docs on 32 cores, noop-materialized,
-# interleaved runs — catalyst [5.48..8.44] s vs arrow [1.38..1.82] s
-# (~4× end-to-end; the folds were the cleaning stack's slowest stage and
-# both pure-Catalyst rewrites lost, BENCH/ROUND5.md).  The catalyst form
-# is kept for pipelines that must stay Python-free.
-REPETITION_IMPL = "arrow"
-
-
-def _with_repetition_stats(docs: "DataFrame", impl: str | None = None) -> "DataFrame":
+def _with_repetition_stats(docs: "DataFrame") -> "DataFrame":
     """Append ``top_bigram_frac`` / ``dup_trigram_frac`` / ``keep`` to a
     frame carrying ``text`` — two stacked projections (raw scalars, then
-    fracs) so each raw scalar is evaluated once, zero shuffles either way
-    (the arrow path adds one ArrowEvalPython node, no exchange)."""
-    if (impl or REPETITION_IMPL) == "arrow":
-        from ..functions.udfs import repetition_stats_udf
+    fracs) so each raw scalar is evaluated once, zero shuffles (one
+    ArrowEvalPython node, no exchange)."""
+    from ..functions.udfs import repetition_stats_udf
 
-        staged = docs.select(
-            "*", repetition_stats_udf(F.col("text")).alias("_rep")
-        ).select(
-            "*",
-            F.col("_rep.wchars").alias("wchars"),
-            F.struct(
-                F.col("_rep.top_cnt").alias("cnt"),
-                F.col("_rep.top_g").alias("g"),
-            ).alias("top"),
-            F.col("_rep.dupchars").alias("dupchars"),
-        ).drop("_rep")
-    else:
-        staged = docs.select("*", *_repetition_raw_cols())
+    staged = docs.select(
+        "*", repetition_stats_udf(F.col("text")).alias("_rep")
+    ).select(
+        "*",
+        F.col("_rep.wchars").alias("wchars"),
+        F.struct(
+            F.col("_rep.top_cnt").alias("cnt"),
+            F.col("_rep.top_g").alias("g"),
+        ).alias("top"),
+        F.col("_rep.dupchars").alias("dupchars"),
+    ).drop("_rep")
     top_frac = F.round(
         F.coalesce(
             F.col("top.cnt")
@@ -1885,7 +1856,7 @@ def q_crawl_frontier(spark, sf_dir):
             spark,
             corpus["pages"],
             store,
-            CrawlConfig(default_budget=6, use_bloom=False),
+            CrawlConfig(default_budget=6),
             robots=corpus["robots"],
             politeness=corpus["politeness"],
         )

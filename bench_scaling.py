@@ -1,17 +1,40 @@
 #!/usr/bin/env python
-"""Two-cluster-size scaling evidence (BASELINE.md criterion).
+"""Two-cluster-size scaling evidence (BASELINE.md criterion), for the three
+execution shapes the engine ships.
 
 The north rule requires throughput scaling efficiency ≥ 0.8 from N to 4N
 executors; no real cluster exists in this sandbox, so per the task brief we
-run the SAME frontier-superstep job on the SAME input at ``local[8]`` and
-``local[32]`` and report throughput at both plus the scaling efficiency.
+run the SAME job on the SAME input at ``local[8]`` and ``local[32]`` and
+report throughput at both plus the scaling efficiency. ``FAMILIES`` is the
+table of measured jobs:
+
+* ``frontier`` (default) — the real engine superstep: politeness window
+  ranking → fetch join → Arrow link-extraction UDF → explode → canonicalize
+  + ignore filters → seen-set anti-join. Writes ``BENCH/BASELINE.md``.
+* ``curation`` — the duplicated-span inverted index
+  (``curation.dup_span_stats``: explode overlapping word grams → 8-byte-hash
+  map-side pre-combine → distinct-doc counts → join back → per-doc reduce),
+  the skeleton of ``line_dedup``, ``ngram_jaccard``, ``decontaminate`` and
+  ``dup_span_removal``; the shuffle-bound family. Writes
+  ``BENCH/SCALING_CURATION.{json,md}``.
+* ``cleaning`` — the zero-shuffle Arrow-UDF projection
+  (``_with_repetition_stats``, the Counter kernel), the per-doc stage every
+  cleaning job runs; it exercises the Python-worker layer (fork/reuse,
+  Arrow batch transfer), which no shuffle benchmark can see. Writes
+  ``BENCH/SCALING_CLEANING.{json,md}``.
+
+The document families synthesize their input IN Spark: 60 pseudo-words per
+doc from a 5000-word vocabulary via integer hashing, identical at any
+parallelism, large enough that gram duplication actually occurs.
 
 Measurement protocol (VERDICT r2 "what's wrong" #1 — the r2 median-of-3 was
-noise on an oversubscribed host; this protocol makes the number auditable):
+noise on an oversubscribed host; this protocol makes the number auditable),
+shared by all families:
 
-* **≥ 7 interleaved rounds** (up to 10 until ≥ 4 are accepted). Each round:
-  kernel probe → engine local[8] → kernel probe → engine local[32] → kernel
-  probe — every engine level is BRACKETED by same-moment ceiling probes.
+* **Interleaved rounds** (at least the family's minimum, up to 3 more until
+  enough are accepted). Each round: kernel probe → engine local[8] → kernel
+  probe → engine local[32] → kernel probe — every engine level is
+  BRACKETED by same-moment ceiling probes.
 * **Round acceptance**: the three kernel speedups must agree within 20 %
   (max/min ≤ 1.2). A round where the attainable ceiling moved mid-round is
   measurement noise by construction and is discarded — reported, not used.
@@ -27,14 +50,17 @@ noise on an oversubscribed host; this protocol makes the number auditable):
   same host contention.
 * ``loadavg`` recorded before/after every round.
 
-Per-level mechanics (unchanged from r1/r2): each level runs in its own JVM,
-CPU-pinned with ``taskset``, heap scaled per-core (a 4N-executor cluster has
-4× total memory); the measured job is the real engine superstep — politeness
-window ranking → fetch join → Arrow link-extraction UDF → explode →
-canonicalize + ignore filters → seen-set anti-join; identical partition
-counts at both levels (strong scaling varies only the executor count).
+Per-level mechanics: each level runs in its own JVM, CPU-pinned with
+``taskset``, heap scaled per-core (a 4N-executor cluster has 4× total
+memory); identical partition counts at both levels (strong scaling varies
+only the executor count).
 
-Writes BENCH/BASELINE.md and prints one JSON line.
+Usage: ``python bench_scaling.py [frontier|curation|cleaning]``; prints one
+JSON line. ``--worker CPUS`` runs one level in-process and prints its JSON
+(``--n-pages``/``--n-docs`` sets the input size). Sizes and minimum rounds
+come from ``SCALING_BENCH_PAGES``/``SCALING_BENCH_ROUNDS``,
+``SCALING_CURATION_DOCS``/``SCALING_CURATION_ROUNDS`` and
+``SCALING_CLEANING_DOCS``/``SCALING_CLEANING_ROUNDS``.
 """
 
 from __future__ import annotations
@@ -46,17 +72,18 @@ import statistics
 import subprocess
 import sys
 import time
+from dataclasses import dataclass
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-N_PAGES = int(os.environ.get("SCALING_BENCH_PAGES", "160000"))
 LINKS_PER_PAGE = 30
+WORDS_PER_DOC = 60
+GRAM_WORDS = 4
+VOCAB = 5000
 WARMUPS = 2
 REPEATS = 3  # best-of-3: each level gets three chances to sample a clean
              # host moment — with 2, one unlucky level skews a whole round
-MIN_ROUNDS = int(os.environ.get("SCALING_BENCH_ROUNDS", "7"))
-MAX_ROUNDS = MIN_ROUNDS + 3
-MIN_ACCEPTED = 4
 KERNEL_AGREE = 1.20  # max/min of a round's kernel speedups
 HEAP_PER_CORE_GB = 0.375
 
@@ -157,6 +184,9 @@ def sha_probe() -> dict:
     }
 
 
+# ---------------------------------------------------------------- frontier
+
+
 def _superstep_inputs(spark, n_pages: int):
     """Spark-generated pages table with a known link graph (no driver loops)."""
     from pyspark.sql import functions as F
@@ -211,13 +241,14 @@ def _superstep_inputs(spark, n_pages: int):
     return pages, frontier, seen
 
 
-def _superstep(spark, pages, frontier, seen):
+def _superstep(inputs, n_pages: int) -> dict:
     from pyspark.sql import functions as F
 
     from apollo_service_spark.functions import urlkit
     from apollo_service_spark.functions.udfs import extract_links_udf
     from apollo_service_spark.operators import politeness as pol
 
+    pages, frontier, seen = inputs
     # rank is derived on read in the engine (crawl_log_df), not computed per
     # superstep — the measured dataflow matches FrontierEngine's common path
     selected, _carry = pol.select_batch(frontier, None, default_budget=10_000_000)
@@ -232,12 +263,143 @@ def _superstep(spark, pages, frontier, seen):
     # compiled — it was the round-3/round-4a scaling-number depressor)
     links = links.filter(~urlkit.is_ignored_fused(F.col("url")))
     new = links.groupBy("url").count().join(seen, "url", "left_anti")
-    return new.count()
+    return {
+        "candidates": n_pages * LINKS_PER_PAGE,
+        "new_urls": new.count(),
+    }
 
 
-def worker(cpus: int, n_pages: int) -> None:
+# -------------------------------------------------------- document families
+
+
+def _synth_docs(spark, n_docs: int, num_partitions: int | None = None):
+    """(doc_id, text): 60 pseudo-words from a 5000-word vocab, deterministic
+    integer hashing — identical at any parallelism. Persisted and
+    materialized, so input generation stays outside the timed region."""
+    from pyspark.sql import functions as F
+
+    words = F.transform(
+        F.sequence(F.lit(0), F.lit(WORDS_PER_DOC - 1)),
+        lambda j: F.concat(
+            F.lit("w"),
+            (
+                (F.col("id") * 2654435761 + j * 40503 + (F.col("id") + j) % 97)
+                % VOCAB
+            ).cast("string"),
+        ),
+    )
+    docs = spark.range(n_docs, numPartitions=num_partitions).select(
+        F.col("id").alias("doc_id"), F.array_join(words, " ").alias("text")
+    ).persist()
+    docs.count()
+    return docs
+
+
+def _dup_span_job(docs, n_docs: int) -> dict:
+    """curation.dup_span_stats over the synthetic corpus, materialized
+    through the noop sink — count() would let the optimizer eliminate the
+    unique-key left join and column-prune the whole gram pipeline away
+    (measured: 114M grams "processed" in 0.28 s — i.e. not processed at
+    all)."""
+    from apollo_service_spark.operators.curation import dup_span_stats
+
+    out = dup_span_stats(docs, gram_words=GRAM_WORDS, max_dup_frac=0.2)
+    out.write.format("noop").mode("overwrite").save()
+    return {"grams": n_docs * (WORDS_PER_DOC - GRAM_WORDS + 1)}
+
+
+def _cleaning_job(docs, n_docs: int) -> dict:
+    """The repetition projection through the Arrow Counter kernel,
+    materialized via the noop sink — count() would column-prune the kernel
+    away entirely."""
+    from apollo_service_spark.plans.queries import _with_repetition_stats
+
+    out = _with_repetition_stats(docs).drop("text")
+    out.write.format("noop").mode("overwrite").save()
+    return {}
+
+
+# ------------------------------------------------------------------ table
+
+
+@dataclass(frozen=True)
+class Family:
+    n: int                # default input size (pages or docs)
+    size_key: str         # worker JSON key of the input size
+    unit: str             # throughput unit: worker JSON has f"{unit}_per_sec"
+    work_key: str | None  # job-result key counting the work done (None: n)
+    min_rounds: int
+    min_accepted: int
+    setup: Callable       # (spark, n) -> inputs
+    job: Callable         # (inputs, n) -> dict of counts
+    # document families only: SCALING_*.json workload name, SCALING_*.md
+    # heading and job description
+    workload: str = ""
+    title: str = ""
+    shape: str = ""
+
+    @property
+    def rate(self) -> str:
+        return f"{self.unit}_per_sec"
+
+
+FAMILIES = {
+    "frontier": Family(
+        n=int(os.environ.get("SCALING_BENCH_PAGES", "160000")),
+        size_key="n_pages",
+        unit="urls",
+        work_key="candidates",
+        min_rounds=int(os.environ.get("SCALING_BENCH_ROUNDS", "7")),
+        min_accepted=4,
+        setup=_superstep_inputs,
+        job=_superstep,
+    ),
+    "curation": Family(
+        n=int(os.environ.get("SCALING_CURATION_DOCS", "400000")),
+        size_key="n_docs",
+        unit="grams",
+        work_key="grams",
+        min_rounds=int(os.environ.get("SCALING_CURATION_ROUNDS", "5")),
+        min_accepted=3,
+        setup=_synth_docs,
+        job=_dup_span_job,
+        workload="curation_dup_span_inverted_index",
+        title="curation inverted-index family",
+        shape=(
+            "duplicated-span detection job "
+            "({n} synthetic docs × {words} words, {grams}-word grams,\n"
+            "5000-word vocab → real duplicate collisions)."
+        ),
+    ),
+    "cleaning": Family(
+        n=int(os.environ.get("SCALING_CLEANING_DOCS", "400000")),
+        size_key="n_docs",
+        unit="docs",
+        work_key=None,
+        min_rounds=int(os.environ.get("SCALING_CLEANING_ROUNDS", "5")),
+        min_accepted=3,
+        setup=lambda spark, n: _synth_docs(spark, n, num_partitions=64),
+        job=_cleaning_job,
+        workload="cleaning_arrow_repetition_kernel",
+        title="Arrow cleaning-kernel family",
+        shape=(
+            "zero-shuffle Arrow-UDF cleaning projection "
+            "({n} synthetic docs × {words} words,\n"
+            "repetition Counter kernel + derived fracs, noop-materialized).  "
+            "This is the\nPython-worker execution shape — the one the "
+            "frontier and inverted-index\nfamilies cannot see."
+        ),
+    ),
+}
+
+
+# ------------------------------------------------------------------ levels
+
+
+def worker(family: str, cpus: int, n: int) -> None:
     from apollo_service_spark.session import build_session
 
+    fam = FAMILIES[family]
     heap = max(3, int(cpus * HEAP_PER_CORE_GB))
     # IDENTICAL partitioning at both levels (sized for the wide level, 3
     # tasks/core there) — strong scaling varies ONLY the executor count;
@@ -252,7 +414,7 @@ def worker(cpus: int, n_pages: int) -> None:
     # walls at local[32] until the heap finished growing). Pre-touching
     # moves that cost into JVM startup, outside the timed region.
     spark = build_session(
-        app_name=f"scaling-{cpus}",
+        app_name=f"scaling-{family}-{cpus}",
         master=f"local[{cpus}]",
         shuffle_partitions=64,
         extra_conf={
@@ -260,39 +422,38 @@ def worker(cpus: int, n_pages: int) -> None:
             "spark.driver.memory": f"{heap}g",
             "spark.driver.extraJavaOptions": f"-Xms{heap}g -XX:+AlwaysPreTouch",
             # size post-shuffle partitions to the benchmark's data volume:
-            # the default 64MB advisory target coalesces this job's ~300MB
-            # shuffle to fewer partitions than the wide level has cores,
-            # serializing the agg/anti-join stages at local[32]
+            # the default 64MB advisory target coalesces the frontier job's
+            # ~300MB shuffle to fewer partitions than the wide level has
+            # cores, serializing the agg/anti-join stages at local[32]
             "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    pages, frontier, seen = _superstep_inputs(spark, n_pages)
+    inputs = fam.setup(spark, n)
 
-    candidates = n_pages * LINKS_PER_PAGE
     best = None
     for i in range(WARMUPS + REPEATS):
         t0 = time.monotonic()
-        n_new = _superstep(spark, pages, frontier, seen)
+        counts = fam.job(inputs, n)
         wall = time.monotonic() - t0
         if i < WARMUPS:
             continue
         if best is None or wall < best["wall_s"]:
+            work = counts[fam.work_key] if fam.work_key else n
             best = {
                 "cpus": cpus,
-                "n_pages": n_pages,
-                "candidates": candidates,
-                "new_urls": n_new,
+                fam.size_key: n,
+                **counts,
                 "wall_s": round(wall, 3),
-                "urls_per_sec": round(candidates / wall),
+                fam.rate: round(work / wall),
             }
     print(json.dumps(best))
     spark.stop()
 
 
-def _run_level(cpus: int, n_pages: int) -> dict:
-    cmd = [sys.executable, os.path.abspath(__file__), "--worker", str(cpus),
-           "--n-pages", str(n_pages)]
+def _run_level(family: str, cpus: int, n: int) -> dict:
+    cmd = [sys.executable, os.path.abspath(__file__), family,
+           "--worker", str(cpus), "--n-pages", str(n)]
     if os.path.exists("/usr/bin/taskset"):
         cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
     out = subprocess.run(
@@ -302,82 +463,96 @@ def _run_level(cpus: int, n_pages: int) -> dict:
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-def main() -> None:
-    parser = argparse.ArgumentParser()
-    parser.add_argument("--worker", type=int, default=None)
-    parser.add_argument("--n-pages", type=int, default=N_PAGES)
-    args = parser.parse_args()
-
-    if args.worker is not None:
-        worker(args.worker, args.n_pages)
-        return
-
-    sha_start = sha_probe()
-    best = {8: None, 32: None}
-    rounds = []
+def _rounds(family: str, n: int) -> tuple:
+    """Interleaved, kernel-bracketed rounds until the family's minimum
+    round and acceptance counts are met (at most 3 extra rounds). Returns
+    the round records and, per round, the two levels' worker results."""
+    fam = FAMILIES[family]
+    rounds, levels = [], []
     n_accepted = 0
-    for _round in range(MAX_ROUNDS):
+    for _round in range(fam.min_rounds + 3):
         load0 = os.getloadavg()
         k_pre = kernel_probe()
-        e8 = _run_level(8, args.n_pages)
+        e8 = _run_level(family, 8, n)
         k_mid = kernel_probe()
-        e32 = _run_level(32, args.n_pages)
+        e32 = _run_level(family, 32, n)
         k_post = kernel_probe()
         load1 = os.getloadavg()
 
         ks = [k_pre["speedup"], k_mid["speedup"], k_post["speedup"]]
         agree = max(ks) / min(ks)
-        accepted = agree <= KERNEL_AGREE
-        engine_speedup = e32["urls_per_sec"] / e8["urls_per_sec"]
+        engine_speedup = e32[fam.rate] / e8[fam.rate]
         kernel_speedup = statistics.median(ks)
         rec = {
             "round": _round + 1,
-            "engine8": e8["urls_per_sec"],
-            "engine32": e32["urls_per_sec"],
+            "engine8": e8[fam.rate],
+            "engine32": e32[fam.rate],
             "engine_speedup": round(engine_speedup, 3),
             "kernel_speedups": ks,
             "kernel_agreement": round(agree, 3),
-            "accepted": accepted,
+            "accepted": agree <= KERNEL_AGREE,
             "kernel_speedup_median": round(kernel_speedup, 3),
             "paired_efficiency": round(engine_speedup / kernel_speedup, 3),
             "loadavg_before": [round(x, 2) for x in load0],
             "loadavg_after": [round(x, 2) for x in load1],
         }
         rounds.append(rec)
+        levels.append({8: e8, 32: e32})
         print(f"# round {rec['round']}: {json.dumps(rec)}", file=sys.stderr)
-        if accepted:
-            n_accepted += 1
-            for cpus, res in ((8, e8), (32, e32)):
-                if best[cpus] is None or res["urls_per_sec"] > best[cpus]["urls_per_sec"]:
-                    best[cpus] = res
-        if _round + 1 >= MIN_ROUNDS and n_accepted >= MIN_ACCEPTED:
+        n_accepted += rec["accepted"]
+        if _round + 1 >= fam.min_rounds and n_accepted >= fam.min_accepted:
             break
+    return rounds, levels
+
+
+def main() -> None:
+    parser = argparse.ArgumentParser()
+    parser.add_argument("family", nargs="?", default="frontier",
+                        choices=sorted(FAMILIES))
+    parser.add_argument("--worker", type=int, default=None)
+    parser.add_argument("--n-pages", "--n-docs", dest="n", type=int, default=None)
+    args = parser.parse_args()
+    fam = FAMILIES[args.family]
+    n = fam.n if args.n is None else args.n
+
+    if args.worker is not None:
+        worker(args.family, args.worker, n)
+        return
+
+    os.makedirs("/dev/shm/spark-tmp", exist_ok=True)
+    os.makedirs("BENCH", exist_ok=True)
+    sha_start = sha_probe()
+    rounds, levels = _rounds(args.family, n)
     sha_end = sha_probe()
 
+    # best level results over accepted rounds (all rounds on a degenerate
+    # host with none accepted — flagged in the summary)
+    pool = [lv for r, lv in zip(rounds, levels) if r["accepted"]] or levels
+    best = {
+        cpus: max((lv[cpus] for lv in pool), key=lambda e: e[fam.rate])
+        for cpus in (8, 32)
+    }
+    if args.family == "frontier":
+        summary = _frontier_summary(n, rounds, best, [sha_start, sha_end])
+    else:
+        summary = _family_summary(args.family, n, rounds, best, sha_start)
+    print(json.dumps(summary))
+
+
+def _frontier_summary(n: int, rounds: list, best: dict, sha: list) -> dict:
     acc = [r for r in rounds if r["accepted"]]
     used = acc if acc else rounds  # degenerate host: report, flag below
-    if best[8] is None:  # no accepted rounds — fall back to best overall
-        for r in rounds:
-            for cpus, key in ((8, "engine8"), (32, "engine32")):
-                cur = {"urls_per_sec": r[key], "n_pages": args.n_pages,
-                       "candidates": args.n_pages * LINKS_PER_PAGE,
-                       "new_urls": -1, "wall_s": -1.0}
-                if best[cpus] is None or cur["urls_per_sec"] > best[cpus]["urls_per_sec"]:
-                    best[cpus] = cur
-
     paired = sorted(r["paired_efficiency"] for r in used)
     median_paired = statistics.median(paired)
     engine_speedups = [r["engine_speedup"] for r in used]
     median_engine = statistics.median(engine_speedups)
-    sha_speedups = [sha_start["speedup"], sha_end["speedup"]]
-    t8 = best[8]["urls_per_sec"]
-    t32 = best[32]["urls_per_sec"]
+    sha_speedups = [p["speedup"] for p in sha]
     summary = {
         "metric": "frontier_superstep_scaling",
-        "n_pages": args.n_pages,
+        "n_pages": n,
         "candidates": best[8]["candidates"],
-        "local8_urls_per_sec": t8,
-        "local32_urls_per_sec": t32,
+        "local8_urls_per_sec": best[8]["urls_per_sec"],
+        "local32_urls_per_sec": best[32]["urls_per_sec"],
         "rounds_run": len(rounds),
         "rounds_accepted": len(acc),
         "accepted_is_degenerate_fallback": not acc,
@@ -398,11 +573,68 @@ def main() -> None:
         "criterion": ">= 0.8",
         "pass": bool(acc) and median_paired >= 0.8,
     }
-    print(json.dumps(summary))
-
-    os.makedirs("BENCH", exist_ok=True)
     with open("BENCH/BASELINE.md", "w", encoding="utf-8") as f:
         f.write(_report(summary, best))
+    return summary
+
+
+def _family_summary(
+    family: str, n: int, rounds: list, best: dict, sha_start: dict
+) -> dict:
+    """SCALING_<FAMILY>.{json,md} for a document family; returns the JSON
+    minus its per-round detail."""
+    fam = FAMILIES[family]
+    acc = [r for r in rounds if r["accepted"]]
+    effs = sorted(r["paired_efficiency"] for r in acc) or [0.0]
+    med_eff = effs[len(effs) // 2]
+    raw_eff = (best[32][fam.rate] / best[8][fam.rate]) / 4
+    result = {
+        "workload": fam.workload,
+        "n_docs": n,
+        f"{fam.rate}_8": best[8][fam.rate],
+        f"{fam.rate}_32": best[32][fam.rate],
+        "median_paired_efficiency": round(med_eff, 3),
+        "eff_min": effs[0], "eff_max": effs[-1],
+        "absolute_eff": round(raw_eff, 3),
+        "rounds_accepted": len(acc), "rounds_total": len(rounds),
+        "sha_machine_speedup": round(sha_start["speedup"], 3),
+        "criterion_pass": med_eff >= 0.8,
+        "rounds": [
+            {
+                "e8": r["engine8"], "e32": r["engine32"],
+                "raw_speedup": r["engine_speedup"],
+                "kernel_speedups": r["kernel_speedups"],
+                "kernel_agree": r["kernel_agreement"],
+                "paired_eff": r["paired_efficiency"],
+                "accepted": r["accepted"],
+                "loadavg": [r["loadavg_before"][0], r["loadavg_after"][0]],
+            }
+            for r in rounds
+        ],
+    }
+    stem = f"BENCH/SCALING_{family.upper()}"
+    with open(f"{stem}.json", "w") as f:
+        json.dump(result, f, indent=1)
+    shape = fam.shape.format(n=n, words=WORDS_PER_DOC, grams=GRAM_WORDS)
+    unit = f"{fam.unit}/s"
+    with open(f"{stem}.md", "w") as f:
+        f.write(
+            f"# Scaling evidence — {fam.title}\n\n"
+            "Same protocol as BENCH/BASELINE.md (kernel-bracketed interleaved "
+            "rounds,\ntaskset-pinned JVMs, identical partitioning at both "
+            f"levels), measured on the\n{shape}\n\n"
+            f"- local[8]:  **{best[8][fam.rate]:,} {unit}** "
+            f"(best of {len(rounds)} rounds)\n"
+            f"- local[32]: **{best[32][fam.rate]:,} {unit}**\n"
+            f"- median paired efficiency (kernel-normalized, accepted rounds "
+            f"only): **{med_eff}**\n"
+            f"- dispersion: {effs[0]} – {effs[-1]} over {len(acc)} accepted "
+            f"/ {len(rounds)} rounds\n"
+            f"- absolute N→4N efficiency (no normalization): {round(raw_eff, 3)}\n"
+            f"- criterion (≥ 0.8): {'PASS' if med_eff >= 0.8 else 'FAIL'}\n\n"
+            f"Per-round detail in SCALING_{family.upper()}.json.\n"
+        )
+    return {k: v for k, v in result.items() if k != "rounds"}
 
 
 def _report(s: dict, best: dict) -> str:

@@ -293,20 +293,21 @@ def test_candidate_link_pipeline_compiles(spark, tmp_path):
 
 def test_dedup_reuses_groupby_partitioning(spark, documents, tmp_path):
     """_dedup's exclusion anti-join must reuse the url hash layout the
-    candidate groupBy already produced: exactly one exchange per input
-    branch (links, exclude, seen), none between the aggregate and the
-    joins. A fourth exchange means the join stopped reusing the groupBy's
-    partitioning (e.g. someone re-keyed the aggregate by (url, host))."""
+    candidate groupBy already produced. Three exchanges in all: one per
+    anti-join input (links by url, exclude by url) and the seen-store's
+    groupBy-pid shuffle feeding filter_new's applyInArrow — none between
+    the aggregate and the join. A fourth means the join stopped reusing the
+    groupBy's partitioning (e.g. someone re-keyed the aggregate by
+    (url, host))."""
     import re
 
-    from apollo_service_spark.operators.frontier import CrawlConfig, FrontierEngine
+    from apollo_service_spark.operators.frontier import FrontierEngine
     from apollo_service_spark.sources.storage import SnapshotStore
 
     links = _frontier_df(documents)
     # filters, not limit(): GlobalLimit plans its own Exchange SinglePartition
     # which would pollute the exchange count under test
     exclude = links.filter(F.crc32(F.col("url")) % 7 == 0).select("url")
-    seen = links.filter(F.crc32(F.col("url")) % 11 == 0).select("url")
     engine = FrontierEngine(
         spark,
         links.select(
@@ -315,19 +316,20 @@ def test_dedup_reuses_groupby_partitioning(spark, documents, tmp_path):
             F.lit(None).cast("string").alias("text"), F.lit("en").alias("lang"),
         ),
         SnapshotStore(str(tmp_path)),
-        CrawlConfig(seen_backend="broadcast", use_bloom=False),
     )
     try:
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            plan = _plan(engine._dedup(links, seen, exclude, seen_count=0))
+            plan = _plan(engine._dedup(links, exclude))
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     finally:
         engine.pages.unpersist()
     exchanges = re.findall(r"^\(\d+\) Exchange", plan, flags=re.MULTILINE)
     assert len(exchanges) == 3, plan
+    keys = re.findall(r"Arguments: hashpartitioning\((\w+)#", plan)
+    assert sorted(keys) == ["_pid", "url", "url"], plan
 
 
 def test_pii_redact_single_stage_no_exchange(spark):
@@ -369,8 +371,8 @@ def test_repetition_stats_zero_exchange(spark):
     """Repetition stats are per-doc scalars: any Exchange or Expand here
     means the explode+groupBy shape crept back (it shuffled ~2 string rows
     per word, twice).  The per-doc compute is ONE ArrowEvalPython node —
-    the Counter kernel, the measured default over the Catalyst folds
-    (REPETITION_IMPL; BENCH/ROUND5.md) — and never row-at-a-time Python."""
+    the Counter kernel, which replaced the Catalyst folds (BENCH/ROUND5.md)
+    — and never row-at-a-time Python."""
     import __spark_entry__ as em
 
     import re
@@ -386,18 +388,6 @@ def test_repetition_stats_zero_exchange(spark):
     assert "BatchEvalPython" not in plan, plan
     n_arrow = len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, flags=re.MULTILINE))
     assert n_arrow == 1, f"{n_arrow} ArrowEvalPython nodes\n{plan}"
-
-
-def test_repetition_stats_catalyst_variant_pure_jvm(spark):
-    """The retained impl="catalyst" path must stay entirely JVM-side —
-    it exists precisely for pipelines that must run Python-free."""
-    from apollo_service_spark.plans.queries import _with_repetition_stats
-    from apollo_service_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    plan = _plan(_with_repetition_stats(docs, impl="catalyst").drop("text"))
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
 
 
 def test_corpus_clean_single_join(spark):

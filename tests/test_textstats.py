@@ -170,6 +170,21 @@ def test_run_length_folds_match_brute_force(spark):
         assert out[i]["dup"] == expect_dup, (i, grams)
 
 
+def _repetition_raw_cols() -> list:
+    """The Catalyst-fold reference for ``udfs.repetition_stats_udf``: the
+    three per-doc scalars the repetition fracs derive from, as named column
+    expressions over a ``text`` column."""
+    return [
+        textstats.word_char_count(F.col("text")).alias("wchars"),
+        textstats.top_run(
+            F.array_sort(textstats.word_ngrams(F.col("text"), 2))
+        ).alias("top"),
+        textstats.dup_run_chars(
+            F.array_sort(textstats.word_ngrams(F.col("text"), 3)), 3
+        ).alias("dupchars"),
+    ]
+
+
 def test_arrow_repetition_kernel_matches_catalyst(spark):
     """The Counter kernel (udfs.repetition_stats_udf) must reproduce the
     Catalyst folds EXACTLY — wchars, top.cnt, top.g, dupchars per doc —
@@ -180,8 +195,6 @@ def test_arrow_repetition_kernel_matches_catalyst(spark):
     (null → wchars null but top (0, null) / dupchars 0, because
     window_join coalesces its null gram array to empty)."""
     import random
-
-    from apollo_service_spark.plans.queries import _with_repetition_stats
 
     rng = random.Random(20260819)
     vocab = ["aa", "bb", "cc", "dd", "ü", "ee ee"]  # embedded space via join
@@ -197,7 +210,6 @@ def test_arrow_repetition_kernel_matches_catalyst(spark):
         " ".join(rng.choices(vocab, k=rng.randint(0, 30))) for _ in range(40)
     ]
     from apollo_service_spark.functions.udfs import repetition_stats_udf
-    from apollo_service_spark.plans.queries import _repetition_raw_cols
 
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(cases)], "doc_id int, text string"
@@ -216,22 +228,6 @@ def test_arrow_repetition_kernel_matches_catalyst(spark):
     }
     for i, t in enumerate(cases):
         assert cat_raw[i] == arr_raw[i], (i, t, cat_raw[i], arr_raw[i])
-
-    # and the derived fracs + keep flag through the shared staging helper
-    out_cols = ["doc_id", "top_bigram_frac", "dup_trigram_frac", "keep"]
-    cat = {
-        r[0]: tuple(r[1:])
-        for r in _with_repetition_stats(docs, impl="catalyst")
-        .select(*out_cols)
-        .collect()
-    }
-    arr = {
-        r[0]: tuple(r[1:])
-        for r in _with_repetition_stats(docs, impl="arrow")
-        .select(*out_cols)
-        .collect()
-    }
-    assert cat == arr
 
 
 def test_arrow_repetition_kernel_mega_doc(spark):
